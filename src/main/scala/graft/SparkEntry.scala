@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{Dedup, Multimodal, Similarity, TextOps}
 import graft.spark.{EncodeJob, OrcInterop, TableEncoder}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, sources}
 import org.apache.spark.sql.functions._
 
 /** Driver contract — queries per implemented operator (SURVEY.md §2 codecs
@@ -224,7 +224,9 @@ object SparkEntry {
       val chunks = TableEncoder.encode(TableEncoder.shred(clustered, specs), specs,
         indexStrideRows = 2000, segmented = true)
       TableEncoder.unshred(
-          TableEncoder.decodePruned(chunks, specs, "l_orderkey", 1000L, 2000L), specs)
+          TableEncoder.decodePruned(chunks, specs, Seq(
+            sources.GreaterThanOrEqual("l_orderkey", 1000L),
+            sources.LessThanOrEqual("l_orderkey", 2000L))), specs)
         .filter(col("l_orderkey").between(1000, 2000))
         // total order (tie determinism under partitioning, see rt_lineitem)
         .orderBy(li.columns.map(col).toIndexedSeq: _*)
@@ -393,7 +395,7 @@ object SparkEntry {
       val chunks = TableEncoder.encode(TableEncoder.shred(docs, specs), specs,
         strideRows = 100, segmented = true, bloomColumns = Set("text"))
       TableEncoder.unshred(
-          TableEncoder.decodePrunedEqualsString(chunks, specs, "text", target), specs)
+          TableEncoder.decodePruned(chunks, specs, Seq(sources.EqualTo("text", target))), specs)
         .filter(col("text") === lit(target))
         .select("doc_id", "lang")
         .orderBy("doc_id")

@@ -465,13 +465,14 @@ object EncodeJob {
   }
 
   /** Manifest entries from the JSON commit files (driver-side parse) plus
-    * a flag for legacy parquet rows being present too.
+    * the paths of legacy parquet manifest files — read those by name,
+    * never the whole dir, which also holds the JSON commits.
     */
   private[graft] def readManifestJson(spark: SparkSession, outDir: String)
-      : (Seq[ManifestEntry], Boolean) = {
+      : (Seq[ManifestEntry], Seq[String]) = {
     val dir = new org.apache.hadoop.fs.Path(manifestDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return (Seq.empty, false)
+    if (!fs.exists(dir)) return (Seq.empty, Seq.empty)
     val statuses = fs.listStatus(dir)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val entries = statuses.iterator.filter { s =>
@@ -490,18 +491,20 @@ object EncodeJob {
           o.get("wall_ms").asLong(), o.get("codecs").asText())
       }
     }.toSeq
-    val parquetPresent = statuses.exists(_.getPath.getName.endsWith(".parquet"))
-    (entries, parquetPresent)
+    val legacy = statuses.iterator.map(_.getPath).filter { p =>
+      p.getName.endsWith(".parquet") && !p.getName.startsWith(".") && !p.getName.startsWith("_")
+    }.map(_.toString).toSeq
+    (entries, legacy)
   }
 
   /** Every manifest entry — JSON commits plus legacy parquet rows. Tests
     * and tools; snapshot loading uses the same sources aggregated.
     */
   def manifestEntries(spark: SparkSession, outDir: String): Seq[ManifestEntry] = {
-    val (json, parquetPresent) = readManifestJson(spark, outDir)
+    val (json, legacyFiles) = readManifestJson(spark, outDir)
     val legacy =
-      if (!parquetPresent) Seq.empty
-      else spark.read.schema(TableMeta.manifestSchema).parquet(manifestDir(outDir))
+      if (legacyFiles.isEmpty) Seq.empty
+      else spark.read.schema(TableMeta.manifestSchema).parquet(legacyFiles: _*)
         .as[ManifestEntry](org.apache.spark.sql.Encoders.product[ManifestEntry])
         .collect().toSeq
     json ++ legacy
@@ -711,12 +714,12 @@ object EncodeJob {
     }
     val preds = resolved.toSeq.flatMap(conjuncts)
       .flatMap(e => org.apache.spark.sql.graftbridge.Bridge.translateV1Filter(e))
-      .flatMap(f => graft.spark.source.ChunkPrune.from(f, specs))
+      .flatMap(f => ChunkPrune.from(f, specs))
     batchesPossiblyMatching(spark, outDir, preds, visible)
   }
 
   private def batchesPossiblyMatching(spark: SparkSession, outDir: String,
-                                      preds: Seq[graft.spark.source.ChunkPrune],
+                                      preds: Seq[ChunkPrune],
                                       visible: Set[Int]): Set[Int] = {
     import org.apache.spark.sql.functions.{countDistinct, min}
     if (preds.isEmpty) return visible
@@ -737,7 +740,7 @@ object EncodeJob {
     // the scan's fileKeep); a chunk missing rows for some predicate
     // column — older schema — keeps conservatively (nc < #pred columns)
     val predColCount = preds.map(_.column).distinct.size
-    val agg = rows.withColumn("k", preds.map(_.keepColumn).reduce(_ && _))
+    val agg = rows.withColumn("k", ChunkPrune.keepAll(preds))
       .groupBy(col("batch"), col("part_id"), col("chunk_id"))
       .agg(min(col("k")).as("ck"), countDistinct(col("column")).as("nc"))
     val matching = agg.filter(col("ck") || col("nc") < lit(predColCount))
@@ -794,10 +797,7 @@ object EncodeJob {
 
     val (newBatch, partOffset) = nextBatchAndPart(spark, outDir)
     val df = transform(decodeBatches(spark, outDir, toCompact, schema))
-    // presence flag + snapshot-sourced codecs; explicit schema keeps the
-    // (never-executed) frame from paying a footer-inference pass
-    val manifest = Some(spark.read.schema(TableMeta.manifestSchema).parquet(manifestDir(outDir)))
-    val (entries, _) = encodeOneBatch(df, cfg, newBatch, partOffset, manifest,
+    val (entries, _) = encodeOneBatch(df, cfg, newBatch, partOffset, hadBatches = true,
       schemaOverride = Some(schema))
 
     // THE commit: swap old for new atomically
@@ -1016,17 +1016,17 @@ object EncodeJob {
 
   /** Encode one complete DataFrame as manifest batch `batchId` — the unit
     * a Structured Streaming micro-batch maps onto (StreamingEncode). Codec
-    * decisions come from the existing manifest's lineage when present
-    * (the stream pins them on batch 0), else from a fresh sample. part_ids
-    * are offset by batchId × numPartitions so chunks from different
-    * batches never collide in decode's (part_id, chunk_id) grouping.
+    * decisions come from the existing manifest's lineage when the dir
+    * `hadBatches` (the stream pins them on batch 0), else from a fresh
+    * sample. part_ids are offset by batchId × numPartitions so chunks
+    * from different batches never collide in decode's (part_id,
+    * chunk_id) grouping.
     */
-  def runBatch(df: DataFrame, cfg: Config, batchId: Int,
-               existingManifest: Option[DataFrame]): Result = {
+  def runBatch(df: DataFrame, cfg: Config, batchId: Int, hadBatches: Boolean): Result = {
     val spark = df.sparkSession
     import spark.implicits._
     val (entries, specs) = encodeOneBatch(df, cfg, batchId,
-      partIdOffset = batchId * cfg.numPartitions, existingManifest)
+      partIdOffset = batchId * cfg.numPartitions, hadBatches)
     // commit point: the batch is durable only once these rows land —
     // a driver-side JSON commit file (atomic rename), no Spark job
     writeManifestEntries(spark, cfg.outDir, entries.toIndexedSeq)
@@ -1040,7 +1040,7 @@ object EncodeJob {
     * replay simply overwrites.
     */
   private def encodeOneBatch(df: DataFrame, cfg: Config, batchId: Int, partIdOffset: Int,
-                             existingManifest: Option[DataFrame],
+                             hadBatches: Boolean,
                              // compact passes the dir's persisted schema: the
                              // decoded frame is all-nullable, and rewriting
                              // schema.json from it would flip nullability
@@ -1050,8 +1050,8 @@ object EncodeJob {
     val spark = df.sparkSession
     import spark.implicits._
 
-    val stringCodecs: Map[String, String] = existingManifest
-      .flatMap(_ => TableMeta.snapshot(spark, cfg.outDir).codecs)
+    val stringCodecs: Map[String, String] =
+      (if (hadBatches) TableMeta.snapshot(spark, cfg.outDir).codecs else None)
       .map(parseLineage)
       .getOrElse(pinStringCodecs(df, cfg.sampleRows))
     val schema = schemaOverride.getOrElse(df.schema)
@@ -1059,7 +1059,7 @@ object EncodeJob {
     val codecLineage = lineage(specs)
 
     writeSchemaJson(spark, cfg.outDir, schema)
-    maintainSortClaim(spark, cfg.outDir, cfg, hadBatches = existingManifest.isDefined)
+    maintainSortClaim(spark, cfg.outDir, cfg, hadBatches = hadBatches)
     val shredded = TableEncoder.shred(partitionWithSalt(df, cfg), specs)
     val t0 = System.nanoTime()
     val chunks = TableEncoder.encode(shredded, specs, cfg.strideRows,
@@ -1302,29 +1302,6 @@ object EncodeJob {
     layoutCache.put(outDir, java.lang.Boolean.valueOf(result))
     result
   }
-
-  /** Point-lookup read: bloom + range + stride pruning on `column`
-    * before any stream blob is touched (see
-    * TableEncoder.decodePrunedEqualsString). Callers still apply the
-    * exact equality filter on the result — pruning returns a superset.
-    */
-  def readBackEquals(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                     column: String, value: String): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsString(committedChunks(spark, outDir), specs, column, value),
-      specs)
-
-  def readBackEqualsLong(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                         column: String, value: Long): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsLong(committedChunks(spark, outDir), specs, column, value),
-      specs)
-
-  def readBackEqualsBinary(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                           column: String, value: Array[Byte]): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(committedChunks(spark, outDir), specs, column, value),
-      specs)
 
   /** Shuffle-based decode: one exchange moves each chunk group to a
     * single task. Always correct regardless of file layout; the fallback

@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core.{ByteBuf, BytesIn, ZlibBlock}
 import graft.columns._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
@@ -33,8 +33,8 @@ object TableEncoder {
   final val DefaultChunkTargetBytes = 32L * 1024 * 1024 // bounded executor memory per buffer
 
   /** Row-index granularity WITHIN a chunk (the reference's 10k-row
-    * stride, WriterConfiguration.cs:29): per-stride min/max let
-    * decodePruned skip most of a partially-overlapping chunk without
+    * stride, WriterConfiguration.cs:29): per-stride min/max let pruned
+    * reads skip most of a partially-overlapping chunk without
     * shrinking chunks (small chunks multiply zlib/dict/FSST fixed costs).
     */
   final val DefaultIndexStrideRows = 10000
@@ -343,8 +343,7 @@ object TableEncoder {
     * above +Inf and NaN = NaN is true); stride indexes exclude NaN, so
     * such a prune may only skip strides of chunks proven NaN-free.
     */
-  final case class StridePrune(column: String, lo: Long, hi: Long,
-                               nanBlockable: Boolean = false)
+  final case class StridePrune(column: String, lo: Long, hi: Long, nanBlockable: Boolean)
 
   /** Order-preserving map double → long (Lucene's sortableLong): stride
     * min/max for double columns ride the same long-typed row-index fields
@@ -790,17 +789,17 @@ object TableEncoder {
     * and decoded by the same adjacency grouper as the zero-shuffle path.
     */
   def decode(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-             stridePrune: Option[StridePrune] = None): DataFrame =
+             stridePrunes: Seq[StridePrune] = Seq.empty): DataFrame =
     decodeAdjacent(
       chunks.repartition(col("part_id"), col("chunk_id"))
         .sortWithinPartitions("part_id", "chunk_id"),
-      specs, stridePrune)
+      specs, stridePrunes)
 
   /** Column-subset decode — the point of a columnar layout: only the
     * requested columns' streams are decompressed and value-decoded; the
     * rest of each chunk group is filtered out before any blob is touched
-    * (the filter is an untyped metadata predicate, same trick as
-    * decodePruned). Output schema follows `columns` order. Note the
+    * (the filter is an untyped metadata predicate, so no blob is
+    * deserialized). Output schema follows `columns` order. Note the
     * chunk parquet itself still stores all columns in one file — at
     * 100 TB a reader wanting scan-level IO savings too would partition
     * the chunk table by `column`; this API removes the decode CPU and
@@ -884,7 +883,7 @@ object TableEncoder {
     * Row.fromSeq path was 4.5× slower than encode at 32 cores).
     */
   private def decodeAdjacent(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                             stridePrune: Option[StridePrune] = None,
+                             stridePrunes: Seq[StridePrune] = Seq.empty,
                              // when the caller KNOWS every chunk group
                              // carries exactly this many column rows
                              // (uniform batch lineage — EncodeJob checks
@@ -941,7 +940,7 @@ object TableEncoder {
                 s"rows, expected exactly $e — group split across read partitions? " +
                 "(externally re-split files / stale _filemeta.json); " +
                 "read with the shuffled decode()"))
-            pending = decodeChunkInternalRows(group.toMap, sp, writer, stridePrune.toSeq)
+            pending = decodeChunkInternalRows(group.toMap, sp, writer, stridePrunes)
           }
         }
         def hasNext: Boolean = { fill(); pending.hasNext }
@@ -976,194 +975,28 @@ object TableEncoder {
     org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, out, schema)
   }
 
-  /** Stats-pruned decode: skip whole chunks whose [min,max] on `column`
-    * cannot overlap [lo,hi] — the point of the reference's per-stride
-    * statistics (SURVEY §2.5) which its own reader never exploits. At
-    * 100 TB this is the difference between scanning everything and
-    * touching only matching chunks; callers still apply the exact filter
-    * afterwards.
+  /** Stats-pruned decode: chunk groups that some filter provably cannot
+    * match are dropped before any stream blob moves, and inside kept
+    * chunks every filter's stride bounds skip sub-chunk — the point of
+    * the reference's per-stride statistics (SURVEY §2.5), which its own
+    * reader never exploits. Each filter resolves through ChunkPrune.from,
+    * the same evaluator the DSv2 scan uses; filters it cannot act on
+    * prune nothing. Returns a superset: callers still apply the exact
+    * filters to the result.
     */
   def decodePruned(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                   column: String, lo: Long, hi: Long): DataFrame = {
-    // stride stats are only in raw-long order space for the long family —
-    // string/double/float columns record prefix/sortable-bits spaces, so
-    // long bounds must not be compared against them (use the typed
-    // decodePruned* entry points for those)
-    val longFamily = Set("long", "timestamp", "timestamp_ntz", "date", "decimal", "bool")
-    val stridePrune = specs.find(s => s.name.equalsIgnoreCase(column) &&
-        longFamily.contains(s.logical))
-      .map(s => StridePrune(s.name, lo, hi))
-    decodePrunedTyped(chunks, specs, column, lit(lo), lit(hi), LongType, stridePrune)
-  }
-
-  /** Range-prune on a double/float column's stats. Both carry a
-    * per-stride row index in sortable-bits space, so sub-chunk skipping
-    * applies just like integer columns; float query bounds are widened
-    * to the enclosing representable floats so double-typed predicates
-    * never drop a matching stride.
-    */
-  def decodePrunedDouble(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                         column: String, lo: Double, hi: Double): DataFrame = {
-    // widen a lo == ±0.0 bound to the uncanonicalized -0.0 sortable value
-    // (-1) so chunks written before signed-zero canonicalization (whose
-    // stride stats may carry -1 for -0.0) are still kept, never dropped
-    // NaN can match [lo, hi] only when hi itself is NaN (x <= NaN is true
-    // for NaN and for nothing finite) — then stats/stride pruning must
-    // keep chunks that may hold NaN rows (stats exclude NaN)
-    val nanMatch = hi.isNaN
-    val stridePrune = specs.find(s => s.name.equalsIgnoreCase(column)).flatMap { s =>
-      s.logical match {
-        case "double" =>
-          val loBits = if (lo == 0.0) -1L else doubleSortableBits(lo)
-          Some(StridePrune(s.name, loBits, doubleSortableBits(hi), nanBlockable = nanMatch))
-        case "float" =>
-          var lf = lo.toFloat // round bounds OUTWARD to floats
-          if (lf.toDouble > lo) lf = Math.nextDown(lf)
-          var hf = hi.toFloat
-          if (hf.toDouble < hi) hf = Math.nextUp(hf)
-          val loBits = if (lf == 0.0f) -1L else floatSortableBits(lf)
-          Some(StridePrune(s.name, loBits, floatSortableBits(hf), nanBlockable = nanMatch))
-        case _ => None
-      }
-    }
-    decodePrunedTyped(chunks, specs, column, lit(lo), lit(hi), DoubleType, stridePrune,
-      nanKeep = nanMatch)
-  }
-
-  /** Range-prune on a string column's stats: chunk-level lexicographic
-    * bounds plus the 8-byte-prefix stride index for sub-chunk skipping
-    * (bounds mapped floor/ceil so prefix truncation never drops a match).
-    */
-  def decodePrunedString(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                         column: String, lo: String, hi: String): DataFrame = {
-    val stridePrune = specs.find(s => s.name.equalsIgnoreCase(column) && s.logical == "string")
-      .map { s =>
-        val loB = lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val hiB = hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        StridePrune(s.name, stringPrefixFloor(loB), stringPrefixCeil(hiB))
-      }
-    decodePrunedTyped(chunks, specs, column, lit(lo), lit(hi), StringType, stridePrune)
-  }
-
-  /** Range-prune on a wide-decimal (precision 19-38) column's stats,
-    * whose min/max are recorded as plain decimal strings. Narrow
-    * decimals (≤18) store mantissa-space long stats — scale the bounds
-    * and use `decodePruned` for those.
-    */
-  def decodePrunedDecimal(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                          column: String,
-                          lo: java.math.BigDecimal, hi: java.math.BigDecimal): DataFrame = {
-    val spec = subsetSpecs(specs, Seq(column)).head
-    require(spec.logical == "decimal128",
-      s"$column is ${spec.logical}; decimal-string stats exist only for decimal128 columns")
-    val Array(p, s) = spec.narrow.split(',').map(_.toInt)
-    // stride bounds in clamped-mantissa space, rounded OUTWARD (floor/
-    // ceiling scaling + saturating clamp) so truncation can only keep
-    // extra strides, never drop a matching one
-    val loU = clampMantissa(lo.setScale(s, java.math.RoundingMode.FLOOR).unscaledValue)
-    val hiU = clampMantissa(hi.setScale(s, java.math.RoundingMode.CEILING).unscaledValue)
-    decodePrunedTyped(chunks, specs, spec.name, lit(lo), lit(hi), DecimalType(p, s),
-      stridePrune = Some(StridePrune(spec.name, loU, hiU)))
-  }
-
-  /** Point-lookup prune on a string column: a chunk is decoded only when
-    * the value lies within its [min,max] AND its bloom filter (when
-    * written — encode's bloomColumns) does not reject it; the prefix
-    * stride index then skips sub-chunk. On an unsorted high-cardinality
-    * column the range test keeps everything and the bloom carries the
-    * whole prune — the content-addressed-read shape (url/text equality)
-    * min/max stats can't serve.
-    */
-  def decodePrunedEqualsString(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                               column: String, value: String): DataFrame = {
-    val spec = subsetSpecs(specs, Seq(column)).head
-    require(spec.logical == "string", s"$column is ${spec.logical}, not string")
-    val bytes = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val (h1, h2) = graft.core.Bloom.hashPair(bytes)
-    decodePrunedEqualsImpl(chunks, specs, spec.name, lit(value), StringType, h1, h2,
-      Some(StridePrune(spec.name, stringPrefixFloor(bytes), stringPrefixCeil(bytes))))
-  }
-
-  /** Point-lookup prune on a BINARY column — content-addressed lookup of
-    * opaque bytes (html blobs, media keys). Binary columns carry no
-    * min/max (length-sum only), so the bloom filter is the ONLY prune:
-    * without one written, every chunk is conservatively kept.
-    */
-  def decodePrunedEqualsBinary(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                               column: String, value: Array[Byte]): DataFrame = {
-    val spec = subsetSpecs(specs, Seq(column)).head
-    require(spec.logical == "binary", s"$column is ${spec.logical}, not binary")
-    val (h1, h2) = graft.core.Bloom.hashPair(value)
-    decodePrunedEqualsImpl(chunks, specs, spec.name, lit(value), BinaryType, h1, h2, None)
-  }
-
-  /** Long-family point-lookup prune (bloom over the shredded long value —
-    * for decimals pass the scaled mantissa, for dates epoch days).
-    */
-  def decodePrunedEqualsLong(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                             column: String, value: Long): DataFrame = {
-    val spec = subsetSpecs(specs, Seq(column)).head
-    val longFamily = Set("long", "timestamp", "timestamp_ntz", "date", "decimal")
-    require(longFamily.contains(spec.logical), s"$column is ${spec.logical}, not long-family")
-    val (h1, h2) = graft.core.Bloom.hashPairLong(value)
-    decodePrunedEqualsImpl(chunks, specs, spec.name, lit(value), LongType, h1, h2,
-      Some(StridePrune(spec.name, value, value)))
-  }
-
-  private def decodePrunedEqualsImpl(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                                     colName: String, v: Column, statType: DataType,
-                                     h1: Long, h2: Long,
-                                     stridePrune: Option[StridePrune]): DataFrame = {
+                   filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
     import chunks.sparkSession.implicits._
-    // metadata-only keep pass like decodePrunedTyped: range test on the
-    // stats strings plus a bloom rejection test over the (small) bloom
-    // blobs; absent/null stats or bloom keep the chunk (conservative)
-    val bloomRejects = udf { (b: Array[Byte]) =>
-      b != null && !graft.core.Bloom.deserializeTagged(b)._2.mightContain(h1, h2)
-    }
-    val overlap = coalesce(
-      !(col("max_val").try_cast(statType.sql) < v.cast(statType) ||
-        col("min_val").try_cast(statType.sql) > v.cast(statType)),
-      lit(true)) && !bloomRejects(col("bloom"))
-    val keep = chunks.toDF()
-      .filter(col("column") === colName && overlap)
-      .select("part_id", "chunk_id")
+    val preds = filters.flatMap(ChunkPrune.from(_, specs))
+    if (preds.isEmpty) return decode(chunks, specs)
+    // untyped metadata-only keep pass: a typed lambda would deserialize
+    // whole EncodedChunk objects, stream blobs included
+    val keep = ChunkPrune.chunkKeep(chunks.toDF(), preds)
+      .filter(col("ck")).select("part_id", "chunk_id")
     val pruned = chunks
-      .join(org.apache.spark.sql.functions.broadcast(keep), Seq("part_id", "chunk_id"), "left_semi")
+      .join(broadcast(keep), Seq("part_id", "chunk_id"), "left_semi")
       .as[EncodedChunk]
-    decode(pruned, specs, stridePrune)
-  }
-
-  private def decodePrunedTyped(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                                column: String, lo: Column, hi: Column,
-                                statType: DataType,
-                                stridePrune: Option[StridePrune] = None,
-                                nanKeep: Boolean = false): DataFrame = {
-    import chunks.sparkSession.implicits._
-    // column-based (untyped) predicate: a typed lambda filter would
-    // deserialize whole EncodedChunk objects — including the stream
-    // blobs — just to read four metadata fields; this way pruning +
-    // pushdown reach the scan and the keep-set pass never touches blobs.
-    // coalesce(..., true): null stats — absent, or uncastable to the
-    // stat type (e.g. pruning a string column's stats as long, where
-    // try_cast yields null instead of an ANSI cast error) — must KEEP
-    // the chunk (conservative full scan), never silently drop it.
-    // nanKeep: the predicate can match NaN rows, which min/max exclude —
-    // keep any chunk whose nan_count may be > 0 (null = unknown = keep).
-    val rangeKeep = coalesce(
-      !(col("max_val").try_cast(statType.sql) < lo.cast(statType) ||
-        col("min_val").try_cast(statType.sql) > hi.cast(statType)),
-      lit(true))
-    val overlap =
-      if (nanKeep) rangeKeep || coalesce(col("nan_count") > lit(0), lit(true))
-      else rangeKeep
-    val keep = chunks.toDF()
-      .filter(col("column") === column && overlap)
-      .select("part_id", "chunk_id")
-    val pruned = chunks
-      .join(org.apache.spark.sql.functions.broadcast(keep), Seq("part_id", "chunk_id"), "left_semi")
-      .as[EncodedChunk]
-    decode(pruned, specs, stridePrune)
+    decode(pruned, specs, preds.flatMap(_.stridePrune))
   }
 
   /** Physical (shredded) schema for decode output. */

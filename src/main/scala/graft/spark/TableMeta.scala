@@ -102,7 +102,7 @@ object TableMeta {
     // JSON commit files parse on the driver (no Spark job at all);
     // legacy parquet rows — pre-JSON dirs, forged resume fixtures — are
     // aggregated distributedly with the explicit schema when present.
-    val (jsonEntries, parquetPresent) = EncodeJob.readManifestJson(spark, outDir)
+    val (jsonEntries, legacyFiles) = EncodeJob.readManifestJson(spark, outDir)
     // per batch: (maxPart, rows, rawBytes, lineages)
     val agg = scala.collection.mutable.Map[Int, (Int, Long, Long, List[String])]()
     def add(b: Int, part: Int, rows: Long, raw: Long, lineage: Seq[String]): Unit = {
@@ -112,8 +112,8 @@ object TableMeta {
     }
     jsonEntries.foreach(e =>
       add(e.batch_id, e.part_id, e.row_count, e.raw_bytes, Option(e.codecs).toSeq))
-    if (parquetPresent)
-      spark.read.schema(manifestSchema).parquet(manifestPath.toString)
+    if (legacyFiles.nonEmpty)
+      spark.read.schema(manifestSchema).parquet(legacyFiles: _*)
         .groupBy(col("batch_id"))
         .agg(max("part_id").as("mp"), sum("row_count").as("r"),
           sum("raw_bytes").as("b"), collect_set("codecs").as("cs"))
@@ -233,11 +233,17 @@ object TableMeta {
   private val fileKeepCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int], String), (String, Map[String, Boolean])]()
 
+  /** Value-based predicate signature: ChunkPrune renders as a case class
+    * over values, so equal filters share an entry and different ones
+    * never do.
+    */
+  private[spark] def predsKey(preds: Seq[ChunkPrune]): String =
+    preds.map(_.toString).sorted.mkString(";")
+
   def fileKeep(spark: SparkSession, outDir: String, committed: Set[Int],
-               preds: Seq[graft.spark.source.ChunkPrune])
+               preds: Seq[ChunkPrune])
       (compute: => Map[String, Boolean]): Map[String, Boolean] = {
-    val predsSig = preds.map(_.toString).sorted.mkString(";")
-    val key = (outDir, committed.toSeq.sorted, predsSig)
+    val key = (outDir, committed.toSeq.sorted, predsKey(preds))
     listSidecarFiles(spark, outDir, committed) match {
       case None => compute // no sidecar: cheap anyway (empty keep map)
       case Some(listing) =>

@@ -1,6 +1,6 @@
 package graft.spark.source
 
-import graft.spark.{ColumnSpec, EncodeJob, EncodedChunk, TableEncoder}
+import graft.spark.{ChunkPrune, ColumnSpec, EncodeJob, EncodedChunk, TableEncoder}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -17,7 +17,6 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, MakeDecimal, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
@@ -270,11 +269,6 @@ object GraftWriteSupport {
 
     val committed = graft.spark.TableMeta.snapshot(spark, outDir).batchIds
     if (committed.isEmpty) { EncodeJob.run(data, cfg); return }
-    // presence flag + snapshot-sourced codecs inside runBatch; explicit
-    // schema keeps the (never-executed) frame from paying inference
-    val manifest = Some(spark.read.schema(graft.spark.TableMeta.manifestSchema)
-      .parquet(EncodeJob.manifestDir(outDir)))
-
     // append onto live data: schema and layout must match what readers
     // already see — fail loud rather than silently corrupt the dir.
     // Nullability is compared permissively (a non-null projection may
@@ -302,7 +296,7 @@ object GraftWriteSupport {
     val (nextBatch, nextPart) = EncodeJob.nextBatchAndPart(spark, outDir)
     val partTerm = if (nextPart <= 0) 0 else (nextPart - 1) / cfg.numPartitions + 1
     val batchId = math.max(nextBatch, partTerm)
-    EncodeJob.runBatch(data, cfg, batchId, manifest)
+    EncodeJob.runBatch(data, cfg, batchId, hadBatches = true)
   }
 }
 
@@ -599,20 +593,18 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   }
 
   private def computeFileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] = {
-    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.functions.{col, max}
     val dir = new Path(EncodeJob.filestatsDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return Map.empty
     val predCols = preds.map(_.column).toSet
     // explicit sidecar schema: pre-nan_count batches read it as null
-    // (keepSelfColumn's NaN clause keeps conservatively) and no
+    // (PrunePred's NaN clause keeps conservatively) and no
     // inference pass runs
     val rows = graft.spark.TableMeta.readFilestats(spark, outDir)
       .filter(col("batch").isin(committed.toSeq: _*) &&
         col("column").isin(predCols.toSeq: _*))
-    val chunkKeep = rows
-      .withColumn("k", preds.map(_.keepColumn).reduce(_ && _))
-      .groupBy(col("part_id"), col("chunk_id")).agg(min(col("k")).as("ck"))
+    val chunkKeep = ChunkPrune.chunkKeep(rows, preds.toSeq)
     rows.select("file", "part_id", "chunk_id").distinct()
       .join(chunkKeep, Seq("part_id", "chunk_id"))
       .groupBy(col("file")).agg(max(col("ck")).as("keep"))
@@ -908,282 +900,6 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
                                      driver: Option[String] = None)
     extends InputPartition
 
-/** A chunk-level pruning decision derived from one pushed Filter. All
-  * implementations are conservative (keep on any doubt) — correctness
-  * comes from Spark re-applying the exact residual filter above the scan.
-  */
-sealed trait ChunkPrune extends Serializable {
-  def column: String
-  def keepsChunk(c: EncodedChunk): Boolean
-  /** Sub-chunk stride-skip bounds in the stride index's long space, when
-    * this predicate can drive one.
-    */
-  def strideBounds: Option[(Long, Long)] = None
-  /** The same decision as a Column expression over filestats sidecar rows
-    * (column, min_val, max_val, null_count, row_count, bloom), evaluated
-    * distributedly at PLAN time for file-level pruning. Rows of other
-    * columns must stay true (the AND across predicates spans columns).
-    */
-  final def keepColumn: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit}
-    (col("column") =!= lit(column)) || keepSelf
-  }
-  protected def keepSelf: org.apache.spark.sql.Column
-}
-
-/** IsNotNull: an all-null chunk can contribute no matching rows. */
-final case class NotNullPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count < c.row_count
-  override protected def keepSelf: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("null_count") < col("row_count")
-  }
-}
-
-/** IsNull: a null-free chunk can contribute no matching rows. */
-final case class NullOnlyPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count > 0
-  override protected def keepSelf: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("null_count") > 0
-  }
-}
-
-/** In(col, values): keep the chunk if ANY value might be present —
-  * per-value min/max range + bloom probes, OR-combined.
-  */
-final case class AnyOfPrune(column: String, alts: Array[PrunePred]) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = alts.exists(_.keepsChunk(c))
-  override protected def keepSelf: org.apache.spark.sql.Column =
-    alts.map(_.keepSelfColumn).reduce(_ || _)
-}
-
-/** One pushed comparison, pre-resolved on the driver into the spaces the
-  * chunk metadata speaks: the stat-string space for chunk-level min/max,
-  * the stride long space for the sub-chunk row index, and the Bloom hash
-  * pair for equality probes. Conservative everywhere: un-parseable stats
-  * or absent metadata keep the chunk.
-  */
-final case class PrunePred(column: String, logical: String,
-                           loLong: Long, hiLong: Long, longUsable: Boolean,
-                           loDouble: Double, hiDouble: Double, doubleUsable: Boolean,
-                           loStr: Option[String], hiStr: Option[String],
-                           strideLo: Long, strideHi: Long, strideUsable: Boolean,
-                           bloomH1: Long, bloomH2: Long, bloomUsable: Boolean,
-                           nanKeeps: Boolean = false)
-    extends ChunkPrune {
-
-  override def strideBounds: Option[(Long, Long)] =
-    if (strideUsable) Some((strideLo, strideHi)) else None
-
-  /** Chunk min/max (and stride indexes) EXCLUDE NaN — nan_count records
-    * them. Spark orders NaN above every value (nanSafeCompareDoubles), so
-    * a predicate whose match set can contain NaN (`x > v`, `x >= v`,
-    * `x = NaN`) must keep any chunk that may hold NaN rows, no matter
-    * what the NaN-free range says. Absent nan_count (pre-sidecar chunks)
-    * keeps — conservative.
-    */
-  private def nanMayMatch(c: EncodedChunk): Boolean =
-    nanKeeps && c.nan_count.forall(_ > 0)
-
-  def keepsChunk(c: EncodedChunk): Boolean = {
-    if (nanMayMatch(c)) return true
-    val byRange =
-      if (longUsable) overlap(c, _.toLong, loLong, hiLong)(Ordering.Long)
-      // ±0.0 canonicalized on BOTH sides: stats render via Double.toString
-      // (can emit "-0.0"), TotalOrdering puts -0.0 < 0.0, but SQL compares
-      // -0.0 == 0.0 — without the `+ 0.0` a pushed `x >= 0.0` would prune
-      // a chunk whose max is -0.0 (mirrors doubleSortableBits).
-      else if (doubleUsable)
-        overlap(c, s => s.toDouble + 0.0, loDouble + 0.0, hiDouble + 0.0)(Ordering.Double.TotalOrdering)
-      else if (loStr.isDefined || hiStr.isDefined) {
-        def u(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        overlap(c, u, u(loStr.getOrElse("")), hiStr.map(u).orNull)(
-          Ordering.comparatorToOrdering(
-            java.util.Comparator.naturalOrder[org.apache.spark.unsafe.types.UTF8String]()))
-      } else true
-    val byBloom = !bloomUsable || c.bloom.forall { b =>
-      graft.core.Bloom.deserializeTagged(b)._2.mightContain(bloomH1, bloomH2)
-    }
-    byRange && byBloom
-  }
-
-  /** Chunk [min,max] vs [lo,hi] in a parsed space; any parse failure or
-    * absent stat keeps the chunk. hi == null means +∞ (open above).
-    */
-  private def overlap[T](c: EncodedChunk, parse: String => T, lo: T, hi: T)
-                        (implicit ord: Ordering[T]): Boolean =
-    try {
-      val below = hi != null && c.min_val.exists(m => ord.gt(parse(m), hi))
-      val above = c.max_val.exists(m => ord.lt(parse(m), lo))
-      !(below || above)
-    } catch { case _: Exception => true }
-
-  override protected def keepSelf: org.apache.spark.sql.Column = keepSelfColumn
-
-  /** keepsChunk as a Column over sidecar rows — same spaces, same
-    * conservatism: try_cast yields null on unparseable stats and
-    * coalesce(..., true) keeps; string compares ride Spark's binary
-    * collation (= the UTF8String comparator used row-side); bloom
-    * rejection requires a present blob AND a definite miss.
-    */
-  def keepSelfColumn: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, udf}
-    val byRange =
-      if (longUsable)
-        coalesce(!(col("max_val").try_cast("bigint") < lit(loLong) ||
-                   col("min_val").try_cast("bigint") > lit(hiLong)), lit(true))
-      else if (doubleUsable) {
-        // SQL comparisons already treat -0.0 == 0.0 and order NaN largest
-        // (nanSafeCompareDoubles), so no canonicalization needed here; the
-        // NaN hole is the same as keepsChunk's: stats exclude NaN, so a
-        // NaN-matchable predicate must keep rows whose nan_count may be >0
-        // (null nan_count — older sidecar — keeps, conservative).
-        val range =
-          coalesce(!(col("max_val").try_cast("double") < lit(loDouble) ||
-                     col("min_val").try_cast("double") > lit(hiDouble)), lit(true))
-        if (nanKeeps) range || coalesce(col("nan_count") > lit(0), lit(true)) else range
-      }
-      else if (loStr.isDefined || hiStr.isDefined)
-        coalesce(!(hiStr.map(h => col("min_val") > lit(h)).getOrElse(lit(false)) ||
-                   col("max_val") < lit(loStr.getOrElse(""))), lit(true))
-      else lit(true)
-    val byBloom =
-      if (!bloomUsable) lit(true)
-      else {
-        val h1c = bloomH1; val h2c = bloomH2
-        val rejects = udf { (b: Array[Byte]) =>
-          b != null && !graft.core.Bloom.deserializeTagged(b)._2.mightContain(h1c, h2c)
-        }
-        !rejects(col("bloom"))
-      }
-    byRange && byBloom
-  }
-}
-
-object ChunkPrune {
-  /** Resolve a source Filter into a chunk-pruning decision; None when the
-    * stat space can't act on it (still correct — the filter stays
-    * residual above the scan).
-    */
-  def from(f: Filter, specs: Array[ColumnSpec]): Option[ChunkPrune] = f match {
-    case IsNotNull(a) =>
-      specs.find(_.name.equalsIgnoreCase(a)).map(s => NotNullPrune(s.name))
-    case IsNull(a) =>
-      specs.find(_.name.equalsIgnoreCase(a)).map(s => NullOnlyPrune(s.name))
-    case In(a, vs) if vs.nonEmpty =>
-      // all alternatives must resolve, else the disjunction is unsound
-      val alts = vs.map(v => PrunePred.from(EqualTo(a, v), specs))
-      if (alts.forall(_.isDefined)) Some(AnyOfPrune(alts.head.get.column, alts.map(_.get)))
-      else None
-    case _ => PrunePred.from(f, specs)
-  }
-}
-
-object PrunePred {
-  /** Resolve a single comparison against the written spec; None when the
-    * column's stat space can't act on the value type (still correct —
-    * the filter stays residual).
-    */
-  def from(f: Filter, specs: Array[ColumnSpec]): Option[PrunePred] = {
-    val (attr, v, lo, hi) = f match {
-      case EqualTo(a, x)            => (a, x, true, true)
-      case GreaterThan(a, x)        => (a, x, true, false)
-      case GreaterThanOrEqual(a, x) => (a, x, true, false)
-      case LessThan(a, x)           => (a, x, false, true)
-      case LessThanOrEqual(a, x)    => (a, x, false, true)
-      case _                        => return None
-    }
-    val spec = specs.find(_.name.equalsIgnoreCase(attr)).getOrElse(return None)
-    val eq = lo && hi
-
-    def longPred(value: Long, h: Option[(Long, Long)]): PrunePred =
-      PrunePred(spec.name, spec.logical,
-        if (lo) value else Long.MinValue, if (hi) value else Long.MaxValue, longUsable = true,
-        0, 0, doubleUsable = false, None, None,
-        if (lo) value else Long.MinValue, if (hi) value else Long.MaxValue, strideUsable = true,
-        h.map(_._1).getOrElse(0L), h.map(_._2).getOrElse(0L), bloomUsable = h.isDefined)
-
-    spec.logical match {
-      case "long" =>
-        val value = v match {
-          case n: Long => n; case n: Int => n.toLong; case n: Short => n.toLong
-          case n: Byte => n.toLong; case _ => return None
-        }
-        Some(longPred(value, if (eq) Some(graft.core.Bloom.hashPairLong(value)) else None))
-      case "date" =>
-        val days = v match {
-          case d: java.sql.Date       => d.toLocalDate.toEpochDay
-          case d: java.time.LocalDate => d.toEpochDay
-          case _                      => return None
-        }
-        Some(longPred(days, None))
-      case "timestamp" | "timestamp_ntz" =>
-        val micros = v match {
-          case t: java.sql.Timestamp      => DateTimeUtils.fromJavaTimestamp(t)
-          case t: java.time.Instant       => DateTimeUtils.instantToMicros(t)
-          case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
-          case _                          => return None
-        }
-        Some(longPred(micros, None))
-      case "decimal" =>
-        val mantissa = v match {
-          case d: java.math.BigDecimal =>
-            val sc = spec.narrow.split(',')(1).toInt
-            try d.setScale(sc).unscaledValue().longValueExact()
-            catch { case _: ArithmeticException => return None }
-          case _ => return None
-        }
-        Some(longPred(mantissa, None))
-      case "double" | "float" =>
-        val value = v match {
-          case d: Double => d; case d: Float => d.toDouble; case _ => return None
-        }
-        // stride bits mirror decodePrunedDouble: signed-zero lo widened,
-        // float bounds rounded outward to enclosing representables
-        val (sLo, sHi) =
-          if (spec.logical == "double")
-            (if (lo && value == 0.0) -1L
-             else if (lo) TableEncoder.doubleSortableBits(value) else Long.MinValue,
-             if (hi) TableEncoder.doubleSortableBits(value) else Long.MaxValue)
-          else {
-            var lf = value.toFloat; if (lf.toDouble > value) lf = Math.nextDown(lf)
-            var hf = value.toFloat; if (hf.toDouble < value) hf = Math.nextUp(hf)
-            (if (lo && lf == 0.0f) -1L
-             else if (lo) TableEncoder.floatSortableBits(lf) else Long.MinValue,
-             if (hi) TableEncoder.floatSortableBits(hf) else Long.MaxValue)
-          }
-        // the predicate's match set can contain NaN when it's unbounded
-        // above (GreaterThan[OrEqual] — Spark orders NaN above +Inf, so
-        // NaN rows satisfy `x > v`) or when the literal itself is NaN
-        // (NaN = NaN is TRUE in Spark SQL)
-        Some(PrunePred(spec.name, spec.logical, 0, 0, longUsable = false,
-          if (lo) value else Double.NegativeInfinity,
-          if (hi) value else Double.PositiveInfinity, doubleUsable = true,
-          None, None, sLo, sHi, strideUsable = true, 0, 0, bloomUsable = false,
-          nanKeeps = !hi || value.isNaN))
-      case "string" =>
-        val s = v match { case x: String => x; case _ => return None }
-        val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val h = if (eq) Some(graft.core.Bloom.hashPair(bytes)) else None
-        Some(PrunePred(spec.name, spec.logical, 0, 0, longUsable = false,
-          0, 0, doubleUsable = false,
-          if (lo) Some(s) else Some(""), if (hi) Some(s) else None,
-          if (lo) TableEncoder.stringPrefixFloor(bytes) else Long.MinValue,
-          if (hi) TableEncoder.stringPrefixCeil(bytes) else Long.MaxValue,
-          strideUsable = true,
-          h.map(_._1).getOrElse(0L), h.map(_._2).getOrElse(0L), bloomUsable = h.isDefined))
-      case "binary" if eq =>
-        val bytes = v match { case b: Array[Byte] => b; case _ => return None }
-        val (h1, h2) = graft.core.Bloom.hashPair(bytes)
-        Some(PrunePred(spec.name, spec.logical, 0, 0, longUsable = false,
-          0, 0, doubleUsable = false, None, None,
-          0, 0, strideUsable = false, h1, h2, bloomUsable = true))
-      case _ => None
-    }
-  }
-}
-
 /** Hadoop Configuration is not Serializable; standard write/readFields
   * envelope.
   */
@@ -1441,17 +1157,9 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
 
   /** Stride-skip bounds from EVERY pushed predicate (keep-sets intersect
     * in strideKeepFor — a two-column conjunction skips the union of what
-    * each predicate alone would). NaN-matchable predicates are marked
-    * nanBlockable: strideKeepFor only lets them skip strides of chunks
-    * proven NaN-free (the stride index excludes NaN).
+    * each predicate alone would).
     */
-  private val stridePrunes: Seq[TableEncoder.StridePrune] =
-    preds.toSeq.flatMap {
-      case p: PrunePred =>
-        p.strideBounds.map(b =>
-          TableEncoder.StridePrune(p.column, b._1, b._2, nanBlockable = p.nanKeeps))
-      case p => p.strideBounds.map(b => TableEncoder.StridePrune(p.column, b._1, b._2))
-    }
+  private val stridePrunes: Seq[TableEncoder.StridePrune] = preds.toSeq.flatMap(_.stridePrune)
 
   private var pendingFirst: Option[Group] = None // row-grouped lookahead
   private var rows: Iterator[InternalRow] = Iterator.empty

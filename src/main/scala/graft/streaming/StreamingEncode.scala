@@ -79,13 +79,9 @@ object StreamingEncode {
 
     // pin codecs once per stream: batch 0 samples, later batches reuse
     // the lineage recorded in the manifest (runBatch reads it from the
-    // snapshot; the frame below is only the had-batches presence flag)
-    val existing =
-      if (snap.batchIds.isEmpty) None
-      else Some(spark.read.schema(graft.spark.TableMeta.manifestSchema)
-        .parquet(EncodeJob.manifestDir(outDir)))
+    // snapshot)
     val cfg = EncodeJob.Config(outDir, numPartitions, keyColumn, compression = compression)
-    EncodeJob.runBatch(batch, cfg, batchId.toInt, existing)
+    EncodeJob.runBatch(batch, cfg, batchId.toInt, hadBatches = snap.batchIds.nonEmpty)
   }
 
   /** Per-(event-time window, lang) ingestion metrics with a watermark —

@@ -129,6 +129,33 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"pruned read decompressed $pruned B, full scan $full B — pushdown not pruning")
   }
 
+  test("format(graft): a 512-value IN list prunes and returns the exact rows") {
+    // the IN alternatives fold into one plan-time keep expression, which
+    // must stay shallow enough for Catalyst to walk without overflowing
+    val out = s"$tmp/in512"
+    EncodeJob.run(spark.range(0, 4000).select(col("id"), concat(lit("p"), col("id")).as("p")),
+      EncodeJob.Config(out, numPartitions = 4, keyColumn = None, strideRows = 500,
+        sortColumns = Seq("id")))
+    val got = spark.read.format("graft").load(out)
+      .filter(col("id").isin(0 until 512: _*))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got == (0L until 512L).map(i => (i, s"p$i")))
+  }
+
+  test("format(graft): float filter keeps a chunk whose max equals the literal") {
+    // float stats render as Float.toString ("0.05"); read back as a
+    // double that is BELOW 0.05f widened, so a double-space compare
+    // would prune the chunk holding the matching rows
+    val stableSpark = spark
+    import stableSpark.implicits._
+    val out = s"$tmp/floatmax"
+    EncodeJob.run(Seq(0.01f, 0.03f, 0.05f, 0.05f).toDF("f"),
+      EncodeJob.Config(out, numPartitions = 1, keyColumn = None))
+    val src = spark.read.format("graft").load(out)
+    assert(src.filter(col("f") >= 0.05f).count() == 2)
+    assert(src.filter(col("f") === 0.05f).count() == 2)
+  }
+
   test("format(graft): column-partitioned layout reads whole and subset") {
     val df = spark.read.format("graft").load(colOut)
     assert(canon(df) sameElements canon(alltypes))

@@ -3,6 +3,8 @@ package graft.spark
 import graft.columns.Codecs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -22,6 +24,10 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** Inclusive [lo, hi] on one column as pushed source filters. */
+  private def between(column: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(column, lo), LessThanOrEqual(column, hi))
+
   test("decodePruned skips non-overlapping chunks and returns exact rows") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val clustered = li.repartitionByRange(4, col("l_orderkey")).sortWithinPartitions("l_orderkey")
@@ -34,7 +40,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = 500L; val hi = 700L
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "l_orderkey", lo, hi), specs)
+      TableEncoder.decodePruned(chunks, specs, between("l_orderkey", lo, hi)), specs)
     // pruned decode returns a superset restricted to overlapping chunks
     val exact = decoded.filter(col("l_orderkey").between(lo, hi))
     val expected = li.filter(col("l_orderkey").between(lo, hi))
@@ -58,7 +64,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = 500L; val hi = 700L
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "l_orderkey", lo, hi), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, between("l_orderkey", lo, hi)), specs).persist()
 
     // exactness: superset restricted by the predicate equals the source
     val exact = decoded.filter(col("l_orderkey").between(lo, hi))
@@ -79,7 +85,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     decoded.unpersist(); chunks.unpersist()
   }
 
-  test("decodePrunedDouble prunes on a double column's min/max") {
+  test("decodePruned prunes on a double column's min/max") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_extendedprice").cast("double").as("price"))
     val clustered = li.repartitionByRange(4, col("price")).sortWithinPartitions("price")
@@ -89,7 +95,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = 10000.0; val hi = 20000.0
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "price", lo, hi), specs)
+      TableEncoder.decodePruned(chunks, specs, between("price", lo, hi)), specs)
     val exact = decoded.filter(col("price").between(lo, hi))
     val expected = li.filter(col("price").between(lo, hi))
     assert(exact.exceptAll(expected).count() == 0)
@@ -117,7 +123,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = -1000.0; val hi = 1000.0
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "v", lo, hi), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, between("v", lo, hi)), specs).persist()
     val exact = decoded.filter(col("v").between(lo, hi))
     assert(exact.count() == 2001)
     val keptChunkRows = chunks.filter(col("column") === "v" &&
@@ -129,7 +135,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     decoded.unpersist(); chunks.unpersist()
   }
 
-  test("decodePrunedDecimal prunes on a decimal(38,x) column's string stats") {
+  test("decodePruned prunes on a decimal(38,x) column's string stats") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"),
         // mantissa far beyond long range so the DECIMAL128 path is exercised
@@ -144,7 +150,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lo = new java.math.BigDecimal("50000000000000000000001.5")
     val hi = new java.math.BigDecimal("70000000000000000000001.5")
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDecimal(chunks, specs, "big", lo, hi), specs)
+      TableEncoder.decodePruned(chunks, specs, between("big", lo, hi)), specs)
     val exact = decoded.filter(col("big").between(lit(lo), lit(hi)))
     val expected = li.filter(col("big").between(lit(lo), lit(hi)))
     assert(expected.count() > 0, "empty predicate range makes the test vacuous")
@@ -174,7 +180,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lo = new java.math.BigDecimal("1000.25")
     val hi = new java.math.BigDecimal("1200.25")
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDecimal(chunks, specs, "big", lo, hi), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, between("big", lo, hi)), specs).persist()
     val exact = decoded.filter(col("big").between(lit(lo), lit(hi)))
     assert(exact.count() == 201, s"got ${exact.count()}") // ids 1000..1200
     val keptChunkRows = chunks.filter(col("column") === "big" &&
@@ -195,7 +201,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
     val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs, strideRows = 1000)
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "l_returnflag", 0L, 1L), specs)
+      TableEncoder.decodePruned(chunks, specs, between("l_returnflag", 0L, 1L)), specs)
     assert(decoded.count() == df.count(),
       "long-range pruning on a string column must keep every chunk")
   }
@@ -261,7 +267,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     graft.core.BlockCompression.resetCounters()
     val pruned = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "id", 500L, 700L), specs)
+      TableEncoder.decodePruned(chunks, specs, between("id", 500L, 700L)), specs)
     assert(pruned.filter(col("id").between(500, 700)).count() == 201)
     val prunedBytes = graft.core.BlockCompression.decompressInputBytes
     // 1 kept stride of 20 in 1 kept chunk of 2: decompression must drop
@@ -284,7 +290,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = "k001000"; val hi = "k001200"
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedString(chunks, specs, "key", lo, hi), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, between("key", lo, hi)), specs).persist()
     val exact = decoded.filter(col("key").between(lo, hi))
     assert(exact.count() == 201)
     val keptChunkRows = chunks.filter(col("column") === "key" &&
@@ -307,7 +313,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val lo = -250.0; val hi = 250.0
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "v", lo, hi), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, between("v", lo, hi)), specs).persist()
     val exact = decoded.filter(col("v").between(lo, hi))
     assert(exact.count() == 1001)
     val keptChunkRows = chunks.filter(col("column") === "v" &&
@@ -363,7 +369,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val target = rows(12345)._2
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsString(chunks, specs, "k", target), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("k", target))), specs).persist()
     // correctness: the matching row survives, the filter gives exactly it
     val exact = decoded.filter(col("k") === target).collect()
     assert(exact.map(_.getLong(0)).toSeq == Seq(12345L))
@@ -374,13 +380,13 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // long-family variant
     val decodedL = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsLong(chunks, specs, "id", 777L), specs)
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("id", 777L))), specs)
     assert(decodedL.filter(col("id") === 777).count() == 1)
 
     // a column WITHOUT a bloom written keeps chunks conservatively on a
     // miss (no silent drops) — absent value still yields zero matches
     val miss = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsString(chunks, specs, "k", "absent-value"), specs)
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("k", "absent-value"))), specs)
     assert(miss.filter(col("k") === "absent-value").count() == 0)
     chunks.unpersist()
   }
@@ -401,7 +407,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val target = rows(4321)._2
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(chunks, specs, "blob", target), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("blob", target))), specs).persist()
     val exact = decoded.filter(col("blob") === lit(target)).collect()
     assert(exact.map(_.getLong(0)).toSeq == Seq(4321L))
     assert(decoded.count() <= 3 * 1000,
@@ -410,7 +416,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // absent blob: zero matches, no silent drops
     val miss = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(chunks, specs, "blob", "nope".getBytes("UTF-8")), specs)
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("blob", "nope".getBytes("UTF-8")))), specs)
     assert(miss.filter(col("blob") === lit("nope".getBytes("UTF-8"))).count() == 0)
     chunks.unpersist()
   }
@@ -444,7 +450,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nullOut.filter(col("s").isNotNull || col("d").isNotNull).count() == 0)
     // and range-pruning the all-null column keeps rows (sentinel strides)
     val prunedNull = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(nullChunks, specs, "d", 0.0, 1.0), specs)
+      TableEncoder.decodePruned(nullChunks, specs, between("d", 0.0, 1.0)), specs)
     assert(prunedNull.count() == 5000, "all-null strides must be kept, never dropped")
   }
 
@@ -493,7 +499,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
       indexStrideRows = 500, segmented = true).persist()
     val decoded = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "flag", 1L, 1L), specs).persist()
+      TableEncoder.decodePruned(chunks, specs, Seq(EqualTo("flag", true))), specs).persist()
     assert(decoded.filter(col("flag")).count() == 1000)
     val keptChunkRows = chunks.filter(col("column") === "flag" &&
         !(col("max_val").cast("long") < 1L))
@@ -517,5 +523,140 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val decoded = TableEncoder.unshred(TableEncoder.decode(chunks, specs), specs)
     assert(decoded.exceptAll(df).count() == 0)
     assert(df.exceptAll(decoded).count() == 0)
+  }
+
+  test("property: keepsChunk agrees with keepColumn over the same chunk metadata row") {
+    val stableSpark = spark
+    import stableSpark.implicits._
+    val rng = new scala.util.Random(20261017)
+    val schema = StructType(Seq(
+      StructField("l", LongType), StructField("d", DateType),
+      StructField("ts", TimestampType), StructField("dec", DecimalType(10, 2)),
+      StructField("big", DecimalType(38, 4)), StructField("b", BooleanType),
+      StructField("dbl", DoubleType), StructField("flt", FloatType),
+      StructField("s", StringType), StructField("bin", BinaryType)))
+    val specs = TableEncoder.columnSpecs(schema, Map.empty)
+    def pick[T](xs: T*): T = xs(rng.nextInt(xs.length))
+    def opt[T](v: => T): Option[T] = if (rng.nextInt(6) == 0) None else Some(v)
+    def bloomOf(members: Seq[Array[Byte]], long: Seq[Long]): Option[Array[Byte]] =
+      if (rng.nextInt(3) == 0) None
+      else {
+        val b = new graft.core.Bloom.Builder
+        members.foreach(b.addBytes); long.foreach(b.addLong)
+        Some(graft.core.Bloom.serializeTagged(b.build(),
+          if (long.nonEmpty) graft.core.Bloom.TagLong else graft.core.Bloom.TagBytes))
+      }
+    val doubles = Seq(Double.NegativeInfinity, -1e300, -2.5, -0.0, 0.0, 1.5, 2.5, 1e300,
+      Double.PositiveInfinity)
+    val floats = Seq(Float.NegativeInfinity, -2.5f, -0.0f, 0.0f, 0.1f, 1.5f, 2.5f,
+      Float.PositiveInfinity)
+    def str(): String = pick("", "a", "prefix-ab", "prefix-abc", "prefix-abcdefgh-x",
+      "prefix-abcdefgh-y", "zz", "\u00e9t\u00e9", "prefix-abcdefgh")
+    def dec128(): java.math.BigDecimal =
+      new java.math.BigDecimal(java.math.BigInteger.valueOf(rng.nextInt(2001) - 1000)
+        .multiply(java.math.BigInteger.TEN.pow(pick(0, 20))), 4)
+
+    // random chunk metadata per column: a sorted (min, max) pair drawn
+    // from the column's stat space, or absent stats (all-null chunk)
+    var id = 0
+    val chunks = specs.toSeq.flatMap { spec => (0 until 60).map { _ =>
+      id += 1
+      def range[T](draw: => T, render: T => String)(implicit o: Ordering[T]) = {
+        val a = draw; val b = draw
+        (Some(render(o.min(a, b))), Some(render(o.max(a, b))))
+      }
+      val longs = Seq.fill(3)(rng.nextInt(121).toLong - 60)
+      val strs = Seq.fill(3)(str())
+      val ((mn, mx), bloom) = spec.name match {
+        case "l" | "d" | "ts" | "dec" =>
+          (range[Long](rng.nextInt(121) - 60L, _.toString), bloomOf(Nil, longs))
+        case "big" => (range[java.math.BigDecimal](dec128(), _.toPlainString), None)
+        case "b"   => (range[Long](rng.nextInt(2).toLong, _.toString), None)
+        case "dbl" => (range[Double](pick(doubles: _*), _.toString)(Ordering.Double.TotalOrdering), None)
+        case "flt" => (range[Float](pick(floats: _*), _.toString)(Ordering.Float.TotalOrdering), None)
+        case "s"   => (range[String](str(), identity), bloomOf(strs.map(_.getBytes("UTF-8")), Nil))
+        case "bin" => ((None, None), bloomOf(strs.map(_.getBytes("UTF-8")), Nil))
+      }
+      val rows = 10
+      val nulls = if (mn.isEmpty) rows else rng.nextInt(rows)
+      val fp = spec.name == "dbl" || spec.name == "flt"
+      EncodedChunk(id, 0, 0L, spec.name, "", rows, nulls, Map.empty, 0L, 0L,
+        if (rng.nextInt(8) == 0) None else mn, if (rng.nextInt(8) == 0) None else mx, None,
+        bloom = bloom,
+        nan_count = if (fp) pick(Some(0), Some(2), None) else None)
+    }}
+
+    // random filters per column, open and closed bounds, equality, In
+    // and null tests; values in the Scala types Spark pushes
+    def value(column: String): Any = column match {
+      case "l"   => pick[Any](rng.nextInt(121).toLong - 60, rng.nextInt(121) - 60)
+      case "d"   => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(rng.nextInt(121) - 60L))
+      case "ts"  => pick[Any](java.time.Instant.ofEpochSecond(0, (rng.nextInt(121) - 60) * 1000L),
+        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(0, (rng.nextInt(121) - 60) * 1000L)))
+      case "dec" => new java.math.BigDecimal(java.math.BigInteger.valueOf(rng.nextInt(121) - 60),
+        pick(2, 3))
+      case "big" => pick(dec128(), dec128().add(new java.math.BigDecimal("0.00005")))
+      case "b"   => rng.nextBoolean()
+      case "dbl" => pick(Double.NaN +: doubles: _*)
+      case "flt" => pick[Any](pick(Float.NaN +: floats: _*), 0.1, -0.0, 2.5)
+      case "s"   => str()
+      case "bin" => str().getBytes("UTF-8")
+    }
+    val filters: Seq[Filter] = specs.toSeq.flatMap { spec => (0 until 25).map { _ =>
+      val c = spec.name
+      rng.nextInt(9) match {
+        case 0 => EqualTo(c, value(c)); case 1 => GreaterThan(c, value(c))
+        case 2 => GreaterThanOrEqual(c, value(c)); case 3 => LessThan(c, value(c))
+        case 4 => LessThanOrEqual(c, value(c)); case 5 => IsNull(c); case 6 => IsNotNull(c)
+        case _ => In(c, Array.fill(1 + rng.nextInt(4))(value(c)))
+      }
+    }}
+    val preds = filters.flatMap(ChunkPrune.from(_, specs))
+    // every type reaches the evaluator, binary equality included
+    assert(preds.map(_.column).distinct.size == specs.length)
+    assert(preds.exists { case p: PrunePred => p.statType.isInstanceOf[DecimalType]; case _ => false })
+
+    val evaluated = chunks.toDS().select(
+      (col("part_id") +: preds.map(_.keepColumn)).toIndexedSeq: _*).collect()
+      .map(r => r.getInt(0) -> r).toMap
+    var compared = 0
+    for (c <- chunks; (p, j) <- preds.zipWithIndex if p.column == c.column) {
+      val sql = evaluated(c.part_id).getBoolean(j + 1)
+      assert(p.keepsChunk(c) == sql,
+        s"$p on (min=${c.min_val}, max=${c.max_val}, nulls=${c.null_count}, " +
+          s"nan=${c.nan_count}, bloom=${c.bloom.isDefined}): keepsChunk=${!sql}, keepColumn=$sql")
+      compared += 1
+    }
+    // not vacuous: both keep and prune outcomes occur
+    assert(compared > 5000)
+    assert(chunks.exists(c => preds.exists(p => p.column == c.column && !p.keepsChunk(c))))
+  }
+
+  test("format(graft): decimal(38,x) and bool pushdown decompress less than an unfiltered read") {
+    val out = java.nio.file.Files.createTempDirectory("graft-prune-dsv2").toString
+    // big = id·10^20 + 1.5: mantissas beyond long range, monotonic in id
+    val df = spark.range(0, 20000).select(col("id"),
+      concat(col("id").cast("string"), lit("00000000000000000001.5"))
+        .cast("decimal(38,4)").as("big"),
+      (col("id") >= 19000).as("flag"))
+    EncodeJob.run(df, EncodeJob.Config(out, numPartitions = 2, keyColumn = None,
+      strideRows = 1000, sortColumns = Seq("id")))
+    assert(EncodeJob.specsFromDisk(spark, out).get.find(_.name == "big").get.logical == "decimal128")
+    val src = spark.read.format("graft").load(out)
+    def run(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (Long, Long) = {
+      graft.core.BlockCompression.resetCounters()
+      val v = f(src).agg(sum("id"), count(col("big")), count(col("flag"))).first().getLong(0)
+      (v, graft.core.BlockCompression.decompressInputBytes)
+    }
+    val (allSum, full) = run(identity)
+    assert(allSum == (0L until 20000L).sum)
+    val lo = new java.math.BigDecimal("500000000000000000000001.5")
+    val hi = new java.math.BigDecimal("700000000000000000000001.5")
+    val (decSum, decBytes) = run(_.filter(col("big").between(lit(lo), lit(hi))))
+    assert(decSum == (5000L to 7000L).sum)
+    assert(decBytes < full / 2, s"decimal(38,x) pushdown decompressed $decBytes of $full bytes")
+    val (flagSum, flagBytes) = run(_.filter(col("flag") === true))
+    assert(flagSum == (19000L until 20000L).sum)
+    assert(flagBytes < full / 2, s"bool pushdown decompressed $flagBytes of $full bytes")
   }
 }

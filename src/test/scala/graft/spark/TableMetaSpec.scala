@@ -61,6 +61,40 @@ class TableMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.format("graft").load(o).count() == 500L)
   }
 
+  test("file-keep cache key is value-based: equal IN lists share it, different ones do not") {
+    import org.apache.spark.sql.sources.In
+    val specs = TableEncoder.columnSpecs(
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, s STRING"), Map.empty)
+    def key(column: String, vs: Any*): String =
+      TableMeta.predsKey(ChunkPrune.from(In(column, vs.toArray), specs).toSeq)
+    assert(key("id", 1L, 2L, 3L) == key("id", 1L, 2L, 3L))
+    assert(key("id", 1L, 2L, 3L) != key("id", 1L, 2L, 4L))
+    assert(key("s", "a", "b") == key("s", "a", "b"))
+    assert(key("s", "a", "b") != key("s", "a", "c"))
+  }
+
+  test("legacy parquet manifest rows plus JSON commits stay readable and appendable") {
+    val o = s"$tmp/mixed-manifest"
+    val df = spark.range(0, 300).select(col("id"), concat(lit("s"), col("id")).as("s"))
+    df.write.format("graft").mode("overwrite").option("numPartitions", "2").save(o)
+    // turn batch 0's JSON commit into the legacy parquet manifest rows an
+    // older engine wrote
+    val entries = EncodeJob.manifestEntries(spark, o)
+    val mdir = new java.io.File(EncodeJob.manifestDir(o))
+    mdir.listFiles().filter(_.getName.contains("commit-")).foreach(_.delete())
+    spark.createDataFrame(entries).write.mode("append").parquet(mdir.toString)
+    assert(spark.read.format("graft").load(o).count() == 300L)
+
+    // appends now add JSON commits next to the parquet rows
+    df.write.format("graft").mode("append").option("numPartitions", "2").save(o)
+    assert(mdir.listFiles().exists(_.getName.endsWith(".json")))
+    assert(spark.read.format("graft").load(o).count() == 600L)
+    df.write.format("graft").mode("append").option("numPartitions", "2").save(o)
+    assert(spark.read.format("graft").load(o).count() == 900L)
+    assert(TableMeta.snapshot(spark, o).batchIds.size == 3)
+    assert(EncodeJob.manifestEntries(spark, o).map(_.row_count).sum == 900L)
+  }
+
   test("sidecar chunk-file cache revalidates against the sidecar listing") {
     val o = s"$tmp/t2"
     val df = spark.range(0, 300).select(col("id"), (col("id") % 3).as("k"))
