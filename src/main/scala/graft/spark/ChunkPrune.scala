@@ -7,25 +7,39 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The statistics one (chunk, column) carries — all a keep decision
+  * reads. An EncodedChunk and a filestats sidecar row
+  * (`TableMeta.SidecarRow`) are both one.
+  */
+trait ChunkStats {
+  def column: String
+  def min_val: Option[String]
+  def max_val: Option[String]
+  def null_count: Int
+  def row_count: Int
+  def nan_count: Option[Int]
+  def bloom: Option[Array[Byte]]
+}
+
 /** A chunk-level pruning decision derived from one source Filter — the
   * ONE place a predicate is mapped onto chunk statistics. The same
   * decision serves the DSv2 scan (task-time chunk keep + stride skip,
-  * plan-time file keep over the filestats sidecar), DML batch pruning
+  * plan-time file keep over the cached sidecar index), DML batch pruning
   * and the in-memory `TableEncoder.decodePruned`. All implementations are
   * conservative (keep on any doubt) — correctness comes from the caller
   * re-applying the exact predicate to the decoded rows.
   */
 sealed trait ChunkPrune extends Serializable {
   def column: String
-  def keepsChunk(c: EncodedChunk): Boolean
+  def keepsChunk(c: ChunkStats): Boolean
   /** Sub-chunk stride-skip bounds in the stride index's long space, when
     * this predicate can drive one.
     */
   def stridePrune: Option[TableEncoder.StridePrune] = None
   /** The same decision as a Column expression over chunk metadata rows
     * (column, min_val, max_val, null_count, row_count, nan_count, bloom)
-    * — the filestats sidecar or an EncodedChunk frame. Rows of other
-    * columns stay true (the AND across predicates spans columns).
+    * — an EncodedChunk frame. Rows of other columns stay true (the AND
+    * across predicates spans columns).
     */
   final def keepColumn: Column = (col("column") =!= lit(column)) || keepSelf
   protected def keepSelf: Column
@@ -33,22 +47,21 @@ sealed trait ChunkPrune extends Serializable {
 
 /** IsNotNull: an all-null chunk can contribute no matching rows. */
 final case class NotNullPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count < c.row_count
+  override def keepsChunk(c: ChunkStats): Boolean = c.null_count < c.row_count
   override protected def keepSelf: Column = col("null_count") < col("row_count")
 }
 
 /** IsNull: a null-free chunk can contribute no matching rows. */
 final case class NullOnlyPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count > 0
+  override def keepsChunk(c: ChunkStats): Boolean = c.null_count > 0
   override protected def keepSelf: Column = col("null_count") > 0
 }
 
 /** In(col, values): keep the chunk if ANY value might be present —
-  * per-value min/max range + bloom probes, OR-combined. `alts` is a Seq
-  * so the case-class rendering (the plan-time cache key) is value-based.
+  * per-value min/max range + bloom probes, OR-combined.
   */
 final case class AnyOfPrune(column: String, alts: Seq[PrunePred]) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean =
+  override def keepsChunk(c: ChunkStats): Boolean =
     alts.exists(_.keeps(c.min_val, c.max_val, c.nan_count, c.bloom))
   // one UDF running the alternatives' own keep test, not an OR of their
   // Columns: IN lists run to hundreds of values (selective MERGE pushes
@@ -104,7 +117,7 @@ final case class PrunePred(column: String, statType: DataType,
       try cmp(s, b) * sign > 0 catch { case _: NumberFormatException => false })
       .getOrElse(false)
 
-  def keepsChunk(c: EncodedChunk): Boolean = keeps(c.min_val, c.max_val, c.nan_count, c.bloom)
+  def keepsChunk(c: ChunkStats): Boolean = keeps(c.min_val, c.max_val, c.nan_count, c.bloom)
 
   private[spark] def keeps(minVal: Option[String], maxVal: Option[String],
                            nanCount: Option[Int], chunkBloom: Option[Array[Byte]]): Boolean = {
@@ -157,15 +170,19 @@ object ChunkPrune {
   }
 
   /** Per-(part_id, chunk_id) keep over chunk metadata rows: a group is
-    * kept only when EVERY predicate keeps it (`ck`). Shared by the scan's
-    * plan-time file keep and the in-memory pruned decode.
+    * kept only when EVERY predicate keeps it (`ck`) — the in-memory
+    * pruned decode's chunk Datasets.
     */
   def chunkKeep(rows: DataFrame, preds: Seq[ChunkPrune]): DataFrame =
-    rows.withColumn("k", keepAll(preds))
+    rows.withColumn("k", preds.map(_.keepColumn).reduce(_ && _))
       .groupBy(col("part_id"), col("chunk_id")).agg(min(col("k")).as("ck"))
 
-  /** Row-level AND of every predicate's keepColumn. */
-  def keepAll(preds: Seq[ChunkPrune]): Column = preds.map(_.keepColumn).reduce(_ && _)
+  /** keepColumn's scalar twin over one chunk group's stats rows: kept
+    * only when every predicate keeps each row of its own column. The
+    * plan-time file keep and DML batch pruning, over the sidecar index.
+    */
+  def keepsGroup(preds: Seq[ChunkPrune], rows: Iterable[ChunkStats]): Boolean =
+    rows.forall(r => preds.forall(p => p.column != r.column || p.keepsChunk(r)))
 }
 
 object PrunePred {

@@ -687,7 +687,8 @@ object EncodeJob {
     * pruning pass. The condition is resolved by NAME against the table
     * schema, split into conjuncts, translated to V1 filters, and run
     * through the same ChunkPrune stat logic the scan's file pruning
-    * uses, evaluated distributedly over the filestats sidecar. Every
+    * uses, evaluated in memory over the cached sidecar index
+    * (`TableMeta.sidecarIndex`) — no Spark job once it is warm. Every
     * step is conservative: untranslatable conjuncts contribute no
     * pruning, batches without sidecar coverage (or missing a predicate
     * column — schema evolution) count as affected, and an unresolvable
@@ -721,34 +722,21 @@ object EncodeJob {
   private def batchesPossiblyMatching(spark: SparkSession, outDir: String,
                                       preds: Seq[ChunkPrune],
                                       visible: Set[Int]): Set[Int] = {
-    import org.apache.spark.sql.functions.{countDistinct, min}
     if (preds.isEmpty) return visible
-    val dir = new org.apache.hadoop.fs.Path(filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return visible
-    val present = fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
-      case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt
-    }.toSet
-    val covered = visible intersect present
-    if (covered.isEmpty) return visible
-    // explicit sidecar schema: pre-nan_count batches read it as null
-    // (conservative keep), and no inference pass runs
-    val rows = TableMeta.readFilestats(spark, outDir)
-      .filter(col("batch").isin(covered.toSeq: _*) &&
-        col("column").isin(preds.map(_.column).distinct: _*))
+    val index = TableMeta.sidecarIndex(spark, outDir, visible)
+    val predCols = preds.map(_.column).toSet
     // chunk-level keep decided ACROSS predicate columns (same shape as
     // the scan's fileKeep); a chunk missing rows for some predicate
-    // column — older schema — keeps conservatively (nc < #pred columns)
-    val predColCount = preds.map(_.column).distinct.size
-    val agg = rows.withColumn("k", ChunkPrune.keepAll(preds))
-      .groupBy(col("batch"), col("part_id"), col("chunk_id"))
-      .agg(min(col("k")).as("ck"), countDistinct(col("column")).as("nc"))
-    val matching = agg.filter(col("ck") || col("nc") < lit(predColCount))
-      .select("batch").distinct().collect().map(_.getInt(0)).toSet
-    // batches whose sidecar holds NO rows for any predicate column (the
-    // columns predate them entirely) never reach `agg` — conservative
-    val anyRow = rows.select("batch").distinct().collect().map(_.getInt(0)).toSet
-    matching ++ (covered -- anyRow) ++ (visible -- covered)
+    // column — older schema — keeps conservatively, and so does a batch
+    // whose sidecar holds NO rows for any predicate column (the columns
+    // predate it entirely) or that has no sidecar at all
+    val matching = index.filter { case (_, sc) =>
+      val rows = sc.rows.filter(r => predCols(r.column))
+      rows.isEmpty || rows.groupBy(r => (r.part_id, r.chunk_id)).valuesIterator.exists { g =>
+        g.map(_.column).toSet.size < predCols.size || ChunkPrune.keepsGroup(preds, g)
+      }
+    }.keySet
+    matching ++ (visible -- index.keySet)
   }
 
   private def rewriteBatches(spark: SparkSession, outDir: String, targetPartitions: Int,

@@ -56,7 +56,7 @@ final case class EncodedChunk(
     // answer MIN/MAX exactly (max = NaN iff nan_count > 0; min = NaN iff
     // stats absent and nan_count > 0). None for other types and for
     // chunks written before the field existed.
-    nan_count: Option[Int] = None)
+    nan_count: Option[Int] = None) extends ChunkStats
 
 /** Per-partition lineage + metrics row, the manifest/commit-log analogue
   * of the reference's Footer/Metadata tail (OrcWriter.cs:57-98). A

@@ -3,28 +3,28 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Driver-side table-metadata snapshot, cached per JVM and validated
-  * against the filesystem on EVERY access (guide §6: table formats win at
-  * scale by reading manifests instead of re-listing/re-scanning, and
-  * Spark itself caches file listings per session).
+/** Driver-side table metadata, cached per JVM and validated against the
+  * filesystem on EVERY access (guide §6: table formats win at scale by
+  * reading manifests instead of re-listing/re-scanning, and Spark itself
+  * caches file listings per session). Two caches, both LRU-bounded:
   *
-  * Before this cache, every DSv2 action re-ran the same four or five
-  * small Spark jobs at plan time (manifest visibility read, per-batch
-  * column sets, codec lineage, size statistics — each with a parquet
-  * schema-inference pass), so a query that touches a graft table three
-  * times paid the metadata cost three times. Now:
+  *  - the SNAPSHOT per table dir (visibility, per-batch stats, codec
+  *    lineage, per-batch column sets, compaction records). Its validity
+  *    is a SIGNATURE of the manifest + compactions dirs (one `listStatus`
+  *    each, no Spark jobs, no parquet footers): every commit appends a
+  *    manifest file and every compaction adds a record file, so any
+  *    writer — same JVM or not — changes the signature and invalidates
+  *    the entry. A miss parses the JSON commits on the driver (legacy
+  *    parquet manifest rows take one aggregate).
+  *  - the SIDECAR INDEX per (table dir, batch): the filestats rows every
+  *    plan-time keep decision reads (scan file keep, DML batch pruning,
+  *    the chunk-file list). Each entry is validated against its batch
+  *    dir's listing, and evaluating predicates over it runs in memory —
+  *    planning a filtered scan or a DML statement starts no Spark job
+  *    once the index is warm.
   *
-  *  - validity is a SIGNATURE of the manifest + compactions dirs (one
-  *    `listStatus` each, no Spark jobs, no parquet footers): every commit
-  *    appends a manifest file and every compaction adds a record file, so
-  *    any writer — same JVM or not — changes the signature and invalidates
-  *    the entry. The cache can never serve metadata the disk doesn't show.
-  *  - a miss costs ONE distributed aggregate over the manifest (explicit
-  *    schema, so no inference job) returning ~one row per batch, from
-  *    which visibility, per-batch stats, codec lineage and per-batch
-  *    column sets are all derived.
-  *
-  * This is metadata caching only — never row data, never query results.
+  * The cache can never serve metadata the disk doesn't show. This is
+  * metadata caching only — never row data, never query results.
   */
 object TableMeta {
 
@@ -47,24 +47,21 @@ object TableMeta {
   val manifestSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[ManifestEntry].schema
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Snapshot)]()
+  private val cache = new Lru[String, (String, Snapshot)](1024)
 
-  /** Chunk-file lists per (outDir, committed batch set), VALIDATED on
-    * every access against the sidecar dirs' own listing (names + sizes +
-    * mtimes): an overwrite that reuses batch ids, a vacuum, or any other
-    * external change re-lists differently and reloads — only the Spark
-    * job that parses the sidecar rows is ever skipped, never a freshness
-    * check.
+  /** The sidecar index: (outDir, batch) -> (listing signature, rows). */
+  private val sidecarCache = new Lru[(String, Int), (String, SidecarBatch)](1024)
+
+  /** A bounded map that evicts the least recently used entry, so a hot
+    * table keeps its entries however many others pass through.
     */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int]), (String, Option[Seq[(Int, Option[String], String)]])]()
-
-  private def boundedPut[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V],
-                               k: K, v: V): V = {
-    if (m.size > 1024) m.clear() // crude bound; entries rebuild on demand
-    m.put(k, v)
-    v
+  private[spark] final class Lru[K, V](capacity: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, /* accessOrder */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > capacity
+    }
+    def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
+    def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
+    def clear(): Unit = m.synchronized(m.clear())
   }
 
   private def signature(spark: SparkSession, outDir: String): String = {
@@ -85,12 +82,12 @@ object TableMeta {
 
   def snapshot(spark: SparkSession, outDir: String): Snapshot = {
     val sig = signature(spark, outDir)
-    val hit = cache.get(outDir)
-    if (hit != null && hit._1 == sig) return hit._2
-    snapshotLoads.incrementAndGet()
-    val snap = load(spark, outDir)
-    boundedPut(cache, outDir, (sig, snap))
-    snap
+    cache.get(outDir).filter(_._1 == sig).map(_._2).getOrElse {
+      snapshotLoads.incrementAndGet()
+      val snap = load(spark, outDir)
+      cache.put(outDir, (sig, snap))
+      snap
+    }
   }
 
   private def load(spark: SparkSession, outDir: String): Snapshot = {
@@ -136,33 +133,29 @@ object TableMeta {
     Snapshot(batchIds, maxPart, codecs, batchColumns, perBatch, comps)
   }
 
-  /** Chunk-file list for `committed` from the filestats sidecar — None
-    * when any committed batch predates the sidecar (callers fall back to
-    * the legacy chunk-tree walk). Cached per (outDir, batch set): the
-    * sidecar of a committed batch is immutable.
+  /** One filestats sidecar row: a (chunk, column)'s stats plus the chunk
+    * file holding it.
     */
-  def sidecarChunkFiles(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] = {
-    if (committed.isEmpty) return Some(Seq.empty)
-    val key = (outDir, committed.toSeq.sorted)
-    listSidecarFiles(spark, outDir, committed) match {
-      case None =>
-        sidecarCache.remove(key)
-        None // a batch predates the sidecar: caller walks the chunk tree
-      case Some(listing) =>
-        val sig = listing.map(s =>
-          s"${s.getPath}:${s.getLen}:${s.getModificationTime}").mkString(",")
-        val hit = sidecarCache.get(key)
-        if (hit != null && hit._1 == sig) return hit._2
-        val v = parseSidecarFiles(spark, listing.map(_.getPath.toString), committed)
-        boundedPut(sidecarCache, key, (sig, v))._2
-    }
+  final case class SidecarRow(part_id: Int, chunk_id: Int, column: String,
+                              min_val: Option[String], max_val: Option[String],
+                              null_count: Int, row_count: Int, nan_count: Option[Int],
+                              bloom: Option[Array[Byte]], file: String) extends ChunkStats
+
+  /** One committed batch's sidecar: its parquet files (the listing the
+    * entry was validated against) and their rows.
+    */
+  final case class SidecarBatch(sidecarFiles: Seq[String], rows: IndexedSeq[SidecarRow]) {
+    /** Distinct chunk files with the column their path names, if any. */
+    lazy val chunkFiles: Seq[(Option[String], String)] =
+      rows.iterator.map(_.file).distinct.map { p =>
+        ("""column=([^/]+)/""".r.findFirstMatchIn(p).map(_.group(1)), p)
+      }.toSeq
   }
 
-  /** Sidecar parquet schema (fixed projection of the chunk metadata, plus
-    * the `batch` partition column) — explicit everywhere so no read pays
-    * a schema-inference pass; batches written before `nan_count` simply
-    * read it as null, which is the conservative keep.
+  /** Sidecar parquet schema (fixed projection of the chunk metadata) —
+    * explicit so no read pays a schema-inference pass; batches written
+    * before `nan_count` simply read it as null, which is the
+    * conservative keep.
     */
   val filestatsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -171,92 +164,83 @@ object TableMeta {
       StructField("column", StringType), StructField("min_val", StringType),
       StructField("max_val", StringType), StructField("null_count", IntegerType),
       StructField("row_count", IntegerType), StructField("nan_count", IntegerType),
-      StructField("bloom", BinaryType), StructField("file", StringType),
-      StructField("batch", IntegerType)))
+      StructField("bloom", BinaryType), StructField("file", StringType)))
   }
 
-  /** Read the filestats sidecar root with the fixed schema. */
-  def readFilestats(spark: SparkSession, outDir: String): org.apache.spark.sql.DataFrame =
-    spark.read.schema(filestatsSchema).parquet(EncodeJob.filestatsDir(outDir))
-
-  /** Driver-side listing of the committed batches' sidecar parquet files
-    * — the freshness probe AND the read's file list. None when any
-    * committed batch lacks a sidecar dir (pre-sidecar batch: walk).
+  /** The sidecar stats index: per committed batch in `batches` that has a
+    * sidecar, its rows; batches without one (older dirs) are absent and
+    * callers treat them conservatively. A committed batch's sidecar never
+    * changes, so entries are cached per (outDir, batch) — and VALIDATED
+    * on every access against that batch dir's listing (names + sizes +
+    * mtimes): an overwrite that reuses a batch id, a vacuum, or an
+    * external edit lists differently and reloads. A miss reads every
+    * stale batch in ONE Spark job, so an append loads only its new batch.
     */
-  private def listSidecarFiles(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+  def sidecarIndex(spark: SparkSession, outDir: String, batches: Set[Int])
+      : Map[Int, SidecarBatch] = {
     val dir = new org.apache.hadoop.fs.Path(EncodeJob.filestatsDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    // O(batches) presence probe, not a tree walk
+    if (batches.isEmpty || !fs.exists(dir)) return Map.empty
+    // O(batches) presence probe, then one bounded listing per requested
+    // batch dir (never a recursive walk of the whole sidecar tree —
+    // replaced/orphan batches stay unvisited)
     val present = fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
       case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt
     }.toSet
-    if (!committed.subsetOf(present)) return None
-    // one bounded listing per COMMITTED batch dir (never a recursive walk
-    // of the whole sidecar tree — replaced/orphan batches stay unvisited)
-    val sidecar = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    committed.toSeq.sorted.foreach { b =>
-      val bd = new org.apache.hadoop.fs.Path(EncodeJob.filestatsBatchDir(outDir, b))
-      if (!fs.exists(bd)) return None // pre-sidecar batch: caller walks
-      fs.listStatus(bd).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) sidecar += st
-      }
+    val listed = batches.intersect(present).toSeq.sorted.map { b =>
+      val files = fs.listStatus(new org.apache.hadoop.fs.Path(EncodeJob.filestatsBatchDir(outDir, b)))
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      val sig = files.map(s => s"${s.getPath}:${s.getLen}:${s.getModificationTime}").sorted.mkString(",")
+      (b, sig, files.map(_.getPath.toString).sorted.toSeq)
     }
-    Some(sidecar.toSeq)
+    val hits = listed.flatMap { case (b, sig, _) =>
+      sidecarCache.get((outDir, b)).filter(_._1 == sig).map(e => b -> e._2)
+    }.toMap
+    val misses = listed.filterNot(l => hits.contains(l._1))
+    hits ++ (if (misses.isEmpty) Map.empty else loadSidecars(spark, outDir, misses))
   }
 
-  private def parseSidecarFiles(spark: SparkSession, sidecar: Seq[String],
-                                committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] = {
-    if (sidecar.isEmpty) return Some(Seq.empty)
-    // leaf-file reads skip Hive partition discovery, so `batch` rides in
-    // the chunk-file path itself (chunks/batch=N/...), same as the walk.
-    // Explicit schema minus the partition column: leaf reads have none.
-    val leafSchema = org.apache.spark.sql.types.StructType(
-      filestatsSchema.fields.filterNot(_.name == "batch"))
-    val rows = spark.read.schema(leafSchema).parquet(sidecar: _*)
-      .select(col("file")).distinct().collect()
-    Some(rows.iterator.flatMap { r =>
-      val p = r.getString(0)
-      val batch = """batch=(\d+)""".r.findFirstMatchIn(p).map(_.group(1).toInt)
-      val column = """column=([^/]+)/""".r.findFirstMatchIn(p).map(_.group(1))
-      batch.filter(committed.contains).map(b => (b, column, p))
-    }.toSeq)
-  }
-
-  /** Plan-time file-keep maps per (outDir, committed set, predicate
-    * signature), validated against the sidecar listing exactly like the
-    * chunk-file cache: the same filter re-planned (Spark re-plans a scan
-    * per action) stops paying the distributed keep evaluation twice.
+  /** One collect over the sidecar files of every batch in `misses`; the
+    * batch of each row rides in its chunk-file path (chunks/batch=N/...).
     */
-  private val fileKeepCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int], String), (String, Map[String, Boolean])]()
-
-  /** Value-based predicate signature: ChunkPrune renders as a case class
-    * over values, so equal filters share an entry and different ones
-    * never do.
-    */
-  private[spark] def predsKey(preds: Seq[ChunkPrune]): String =
-    preds.map(_.toString).sorted.mkString(";")
-
-  def fileKeep(spark: SparkSession, outDir: String, committed: Set[Int],
-               preds: Seq[ChunkPrune])
-      (compute: => Map[String, Boolean]): Map[String, Boolean] = {
-    val key = (outDir, committed.toSeq.sorted, predsKey(preds))
-    listSidecarFiles(spark, outDir, committed) match {
-      case None => compute // no sidecar: cheap anyway (empty keep map)
-      case Some(listing) =>
-        val sig = listing.map(s =>
-          s"${s.getPath}:${s.getLen}:${s.getModificationTime}").mkString(",")
-        val hit = fileKeepCache.get(key)
-        if (hit != null && hit._1 == sig) return hit._2
-        boundedPut(fileKeepCache, key, (sig, compute))._2
-    }
+  private def loadSidecars(spark: SparkSession, outDir: String,
+                           misses: Seq[(Int, String, Seq[String])]): Map[Int, SidecarBatch] = {
+    val files = misses.flatMap(_._3)
+    val rows = if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
+               else spark.read.schema(filestatsSchema).parquet(files: _*).collect()
+    def opt[T](r: org.apache.spark.sql.Row, i: Int): Option[T] =
+      if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+    val byBatch = rows.iterator.map { r =>
+      val file = r.getString(9)
+      val batch = """batch=(\d+)""".r.findAllMatchIn(file).map(_.group(1).toInt).toSeq.lastOption
+      // the sidecar is written from EncodedChunk's non-optional counts;
+      // an absent one reads as "some nulls, some values" — both null
+      // tests keep
+      batch -> SidecarRow(r.getInt(0), r.getInt(1), r.getString(2),
+        opt[String](r, 3), opt[String](r, 4),
+        opt[Int](r, 5).getOrElse(1), opt[Int](r, 6).getOrElse(Int.MaxValue),
+        opt[Int](r, 7), opt[Array[Byte]](r, 8), file)
+    }.toSeq.groupBy(_._1)
+    misses.map { case (b, sig, sidecarFiles) =>
+      val entry = SidecarBatch(sidecarFiles,
+        byBatch.getOrElse(Some(b), Seq.empty).map(_._2).toIndexedSeq)
+      sidecarCache.put((outDir, b), (sig, entry))
+      b -> entry
+    }.toMap
   }
+
+  /** Chunk-file list for `committed` from the sidecar index — None when
+    * any committed batch predates the sidecar (callers fall back to the
+    * legacy chunk-tree walk).
+    */
+  def sidecarChunkFiles(index: Map[Int, SidecarBatch], committed: Set[Int])
+      : Option[Seq[(Int, Option[String], String)]] =
+    if (!committed.subsetOf(index.keySet)) None
+    else Some(committed.toSeq.sorted.flatMap(b =>
+      index(b).chunkFiles.map { case (c, f) => (b, c, f) }))
 
   /** Drop every cached entry (tests; external tampering recovery). */
   def invalidateAll(): Unit = {
-    cache.clear(); sidecarCache.clear(); fileKeepCache.clear()
+    cache.clear(); sidecarCache.clear()
   }
 }

@@ -577,82 +577,32 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     (pushed ++ runtimeFilters).flatMap(ChunkPrune.from(_, specs))
   }
 
-  /** PLAN-time file pruning from the filestats sidecar: a file whose
-    * every chunk fails the predicates (same conservative keep logic as
-    * the read-side ChunkPrune, evaluated distributedly over the sidecar's
-    * metadata rows) is never opened — no footer read, no page IO. Chunk
-    * keep is decided per (part_id, chunk_id) ACROSS columns first, so on
-    * the column-partitioned layout a predicate on one column prunes the
-    * sibling column files of the same chunks too. Files without sidecar
-    * coverage (older dirs) default to kept.
+  /** PLAN-time file pruning from the sidecar index: a file whose every
+    * chunk fails the predicates (the read-side ChunkPrune keep, evaluated
+    * in memory over the cached sidecar rows — no Spark job) is never
+    * opened — no footer read, no page IO. Chunk keep is decided per
+    * (part_id, chunk_id) ACROSS predicate columns first (part ids are
+    * table-unique), so on the column-partitioned layout a predicate on
+    * one column prunes the sibling column files of the same chunks too.
+    * `index` holds the committed batches only. Files without an entry
+    * (no predicate-column rows, or no sidecar) default to kept.
     */
-  private def fileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] = {
+  private def fileKeep(preds: Seq[ChunkPrune],
+                       index: Map[Int, graft.spark.TableMeta.SidecarBatch]): Map[String, Boolean] = {
     if (preds.isEmpty) return Map.empty
-    graft.spark.TableMeta.fileKeep(spark, outDir, committed, preds.toSeq)(
-      computeFileKeep(preds, committed))
-  }
-
-  private def computeFileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] = {
-    import org.apache.spark.sql.functions.{col, max}
-    val dir = new Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Map.empty
     val predCols = preds.map(_.column).toSet
-    // explicit sidecar schema: pre-nan_count batches read it as null
-    // (PrunePred's NaN clause keeps conservatively) and no
-    // inference pass runs
-    val rows = graft.spark.TableMeta.readFilestats(spark, outDir)
-      .filter(col("batch").isin(committed.toSeq: _*) &&
-        col("column").isin(predCols.toSeq: _*))
-    val chunkKeep = ChunkPrune.chunkKeep(rows, preds.toSeq)
-    rows.select("file", "part_id", "chunk_id").distinct()
-      .join(chunkKeep, Seq("part_id", "chunk_id"))
-      .groupBy(col("file")).agg(max(col("ck")).as("keep"))
+    val rows = index.values.toSeq.flatMap(_.rows).filter(r => predCols(r.column))
+    val chunkKept = rows.groupBy(r => (r.part_id, r.chunk_id))
+      .map { case (k, group) => k -> ChunkPrune.keepsGroup(preds, group) }
+    rows.groupBy(_.file).map { case (f, group) =>
       // scheme-less match keys: sidecars written before the full-URI fix
       // stored stripped paths, newer ones keep the scheme — normalizing
       // BOTH the map keys and the probe (kept()) makes them compare equal
-      .collect().map(r => normPath(r.getString(0)) -> r.getBoolean(1)).toMap
+      normPath(f) -> group.exists(r => chunkKept((r.part_id, r.chunk_id)))
+    }
   }
 
   private def normPath(p: String): String = new Path(p).toUri.getPath
-
-  /** Committed batches' sidecar parquet files — ONLY when every committed
-    * batch has a sidecar (a dir mixing pre-sidecar batches would silently
-    * under-count); empty means "use the chunk files".
-    */
-  private def filestatsFiles(committed: Set[Int]): Seq[String] = {
-    if (committed.isEmpty) return Seq.empty
-    val dir = new Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    // one bounded listing per COMMITTED batch dir (never a recursive walk
-    // of the whole sidecar tree — replaced/orphan batches stay unvisited)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    committed.toSeq.sorted.foreach { b =>
-      val bd = new Path(EncodeJob.filestatsBatchDir(outDir, b))
-      if (!fs.exists(bd)) return Seq.empty // pre-sidecar batch: caller uses chunk files
-      fs.listStatus(bd).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString
-      }
-    }
-    out.toSeq
-  }
-
-  /** Chunk-file list for `committed` from the filestats SIDECAR — the
-    * table's own metadata, read distributedly (the driver receives only
-    * the distinct (batch, file) pairs) — so scan planning never lists the
-    * chunk tree: at 100 TB / millions of files on an object store, an
-    * O(files) recursive driver listing per query plan is the Hive-era
-    * bottleneck table formats exist to remove. None when any committed
-    * batch predates the sidecar (caller falls back to the legacy walk).
-    * Cf. the reference's FileTail idea — never list, read the metadata
-    * (/root/reference/src/ApacheOrcDotNet/FileTail.cs:22-54) — lifted
-    * from file level to table level.
-    */
-  private def sidecarChunkFiles(committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] =
-    graft.spark.TableMeta.sidecarChunkFiles(spark, outDir, committed)
 
   override def planInputPartitions(): Array[InputPartition] =
     planPartitionsFor(visibleBatches, _ => true)
@@ -675,12 +625,16 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     require(fs.exists(dir) || committed.isEmpty,
       s"$outDir has committed batches ${committed.toSeq.sorted.mkString(",")} " +
         "but no chunk dir — externally deleted?")
-    // plan from the table's own metadata (filestats sidecar) whenever
-    // every committed batch carries one; the recursive chunk-tree walk is
-    // only the legacy-dir fallback — O(files) driver listing per plan is
-    // the bottleneck manifests exist to remove
+    // plan from the table's own metadata (the sidecar index) whenever
+    // every committed batch carries one — never listing the chunk tree:
+    // at 100 TB / millions of files on an object store, an O(files)
+    // recursive driver listing per plan is the Hive-era bottleneck table
+    // formats exist to remove (cf. the reference's FileTail idea — never
+    // list, read the metadata — lifted from file level to table level).
+    // The recursive walk is only the legacy-dir fallback.
+    val index = graft.spark.TableMeta.sidecarIndex(spark, outDir, committed)
     val files: Seq[(Int, Option[String], String)] =
-      sidecarChunkFiles(committed) match {
+      graft.spark.TableMeta.sidecarChunkFiles(index, committed) match {
         case Some(list) => list.filter(f => batchKeep(f._1))
         case None =>
           EncodeJob.chunkTreeWalks.incrementAndGet()
@@ -701,7 +655,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
           buf.toSeq
       }
     val keep = if (aggSlots.isDefined) Map.empty[String, Boolean]
-               else fileKeep(activePreds, committed)
+               else fileKeep(activePreds.toSeq, index)
     def kept(path: String): Boolean = keep.getOrElse(normPath(path), true)
     if (aggSlots.isDefined) {
       // aggregate mode: chunk groups need no column alignment (each
@@ -709,9 +663,13 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       // so one partition per FILE maximizes parallelism; zero files →
       // one identity partition so the final merge still sees count=0.
       // Prefer the filestats SIDECAR files when every committed batch has
-      // one: same stat fields, orders of magnitude smaller, and the chunk
-      // files themselves are never opened at all.
-      val sidecar = filestatsFiles(committed)
+      // one (a dir mixing pre-sidecar batches would silently under-count):
+      // same stat fields, orders of magnitude smaller, and the chunk files
+      // themselves are never opened at all.
+      val sidecar =
+        if (committed.nonEmpty && committed.subsetOf(index.keySet))
+          committed.toSeq.flatMap(b => index(b).sidecarFiles)
+        else Seq.empty
       if (sidecar.nonEmpty)
         return sidecar.sorted.map(f =>
           GraftInputPartition(Array(f), Seq.empty): InputPartition).toArray

@@ -586,6 +586,29 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.length == 1 && row(0).getString(2) == "txt4321")
   }
 
+  test("format(graft): back-to-back IN lists and ranges each return exact rows from only the files that can hold them") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def numParts(df: DataFrame): Int =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b.inputRDD.getNumPartitions }.head
+    // four sorted one-file batches: batch b holds ids [2500b, 2500b + 2500)
+    val out = s"$tmp/keep-per-plan"
+    (0 until 4).foreach { b =>
+      spark.range(2500L * b, 2500L * (b + 1)).select(col("id"), concat(lit("p"), col("id")).as("s"))
+        .write.format("graft").mode(if (b == 0) "overwrite" else "append")
+        .option("numPartitions", "1").option("sortColumns", "id").save(out)
+    }
+    val src = spark.read.format("graft").load(out)
+    assert(numParts(src) == 4)
+    def check(q: DataFrame, ids: Seq[Long]): Unit = {
+      assert(numParts(q) == ids.map(_ / 2500).distinct.size, s"files opened for $ids")
+      assert(q.collect().map(_.getLong(0)).sorted.toSeq == ids.sorted)
+    }
+    check(src.filter(col("id").isin(10L, 7600L)), Seq(10L, 7600L))
+    check(src.filter(col("id").isin(2600L, 2601L, 99999L)), Seq(2600L, 2601L))
+    check(src.filter(col("id").between(2400L, 5100L)), 2400L to 5100L)
+    check(src.filter(col("id") >= 9998L), Seq(9998L, 9999L))
+  }
+
   test("readStream(graft): committed batches are micro-batches; appends stream exactly once") {
     val out = s"$tmp/stream-read"
     val b0 = spark.range(100).select(col("id"), concat(lit("a"), col("id")).as("s"))
